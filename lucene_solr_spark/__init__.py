@@ -18,4 +18,9 @@ plans/       tiny query-DSL -> plan rewrite layer (Lucene Query#rewrite analog)
 streaming/   incremental ingest (NRT-segment analog) via Structured Streaming
 """
 
+import logging
+
 __version__ = "0.1.0"
+
+# The package's one logger: fallbacks and query-route decisions report here.
+log = logging.getLogger(__name__)

@@ -43,6 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import log
 from ..functions import packing
 from ..functions.analysis import tokenize_offsets, tokenize_pandas
 from ..functions.smallfloat import byte4_to_int_np, int_to_byte4_np
@@ -550,16 +551,23 @@ def build_index(
                 )
                 shuffle_n = max(8, min(shuffle_n, nbytes // (32 << 20) + 1))
                 sized = True
-        except Exception:
-            pass
+        except Exception as e:
+            log.info(
+                "shuffle sizing: input file sizes unreadable (%s: %s); "
+                "sizing from content volume instead", type(e).__name__, e,
+            )
         if not sized:
             try:
                 nbytes = int(
                     corpus.agg(F.sum(F.length("content"))).first()[0] or 0
                 )
                 shuffle_n = max(8, min(shuffle_n, nbytes // (2 << 20) + 1))
-            except Exception:
-                pass  # unsizable sources keep the session conf
+            except Exception as e:
+                log.info(
+                    "shuffle sizing: content volume unmeasurable (%s: %s); "
+                    "keeping spark.sql.shuffle.partitions=%d",
+                    type(e).__name__, e, shuffle_n,
+                )
 
     if "_version_" not in corpus.columns:
         # optimistic-concurrency version (update/processor/

@@ -196,7 +196,12 @@ def merge_segments(
     import os
 
     root = out_dir or (catalog.root if catalog else None)
-    if catalog is not None and root != catalog.root:
+    # one directory may be spelled several ways (trailing slash, relative
+    # path, symlink): compare where the paths lead, not their text
+    staged = catalog is not None and os.path.realpath(root) == os.path.realpath(
+        catalog.root
+    )
+    if catalog is not None and not staged:
         # a merged segment written OUTSIDE the catalog cannot be committed
         # by the swap below, yet drop_sources would still delete the
         # sources — refuse the combination instead of losing the docs
@@ -212,7 +217,6 @@ def merge_segments(
     # segment set or the new one, never merged docs twice. Physical source
     # cleanup + tombstone purge happen after the commit (a crash in between
     # leaves only unlisted orphan dirs / stale tombstones of dead ids).
-    staged = catalog is not None and root == catalog.root
     seg_path = (
         os.path.join(root, f"_stage-{seg_id}" if staged else seg_id)
         if root

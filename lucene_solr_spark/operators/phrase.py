@@ -48,6 +48,7 @@ from ..functions.analysis import tokenize_text
 from ..functions.packing import delta_decode, unpack_ints
 from ..sources.catalog import Segment
 from . import bm25
+from .search import score_buckets, topk_frame
 
 _TOPK_SCHEMA = "doc_id long, score float"
 
@@ -59,30 +60,38 @@ def phrase_topk(
     k: int = 10,
     slop: int = 0,
     deleted=None,
+    term_dict: dict | None = None,
 ) -> DataFrame:
     """Top-k docs containing the phrase (pinned-tokenizer order).
     ``slop=0``: exact adjacency; ``slop>0``: SloppyPhraseMatcher semantics
     (incl. repeat groups) with fractional sloppy freq. ``deleted``:
     optional sorted int64 array of tombstoned doc_ids, excluded before the
-    local top-k (liveDocs analog — same contract as score_postings)."""
+    local top-k (liveDocs analog — same contract as score_postings).
+    ``term_dict``: the segment's driver-resident (term -> (df, n_blocks))
+    dict (Searcher.term_dict); without it the stats pre-pass reads the
+    terms table. The query runs on the route search.score_buckets picks
+    from its positions rows (one per (term, doc): the terms' summed df)."""
     assert segment.has_table("positions"), (
         "segment was built without positions (build_index(with_positions=True))"
     )
     terms_seq = tokenize_text(phrase_text)
     if not terms_seq:
-        return spark.createDataFrame([], _TOPK_SCHEMA)
+        return topk_frame(spark)
     distinct = sorted(set(terms_seq))
 
     # stats pre-pass (Weight analog): every phrase term must exist
-    stats_df = (
-        segment.table(spark, "terms")
-        .filter(F.col("term").isin(distinct))
-        .select("term", "df")
-        .collect()
-    )
-    df_by_term = {r["term"]: int(r["df"]) for r in stats_df}
+    if term_dict is not None:
+        df_by_term = {t: term_dict[t][0] for t in distinct if t in term_dict}
+    else:
+        stats_df = (
+            segment.table(spark, "terms")
+            .filter(F.col("term").isin(distinct))
+            .select("term", "df")
+            .collect()
+        )
+        df_by_term = {r["term"]: int(r["df"]) for r in stats_df}
     if len(df_by_term) < len(distinct):
-        return spark.createDataFrame([], _TOPK_SCHEMA)
+        return topk_frame(spark)
     n_docs = segment.stats.n_docs
     # idf summed over ALL phrase positions (duplicates counted), float64 then
     # applied in float32 — BM25Similarity#idfExplain(collectionStats, termStats[])
@@ -96,8 +105,7 @@ def phrase_topk(
         )
 
     rows = segment.table(spark, "positions").filter(F.col("term").isin(distinct))
-    per_bucket = rows.groupBy("bucket").applyInPandas(score_bucket, _TOPK_SCHEMA)
-    return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return score_buckets(rows, score_bucket, k, fetch_rows=sum(df_by_term.values()))
 
 
 def phrase_offsets(terms_seq) -> dict[str, list[int]]:

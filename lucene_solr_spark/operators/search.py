@@ -6,9 +6,11 @@ Reference lifecycle being re-expressed (SURVEY.md §3.1):
   -> TopScoreDocCollector per leaf -> TopDocs#merge
 
 Spark restatement:
-  * stats pre-pass: query-term rows from the ``terms`` table (tiny collect —
-    the broadcast side of the plan; ExactStatsCache analog is free because
-    our stats are global by construction).
+  * stats pre-pass: query-term rows from the ``terms`` table — a single
+    segment's Searcher holds (term -> df, n_blocks) on the driver, loaded
+    at open (BlockTreeTermsReader's on-heap terms index), so it launches
+    no job; MultiSearcher runs a tiny collect (ExactStatsCache analog is
+    free because our stats are global by construction).
   * postings scan: ``postings.filter(term.isin(...))`` — the postings table
     is range-partitioned + sorted by term, so parquet row-group min/max stats
     prune everything else (the FST terms-index analog).
@@ -18,6 +20,10 @@ Spark restatement:
     optionally with block-max pruning (WAND analog — see ``_score_bucket``).
   * merge: per-bucket top-k -> global ``orderBy(score desc, doc_id asc)
     .limit(k)`` — TopDocs#merge with the pinned tie-break.
+  * route (``score_buckets``): a single-segment query whose rows fit
+    LOCAL_ROW_BUDGET skips the Python-UDF job — one Arrow fetch, the same
+    per-bucket leaves on the driver, the same merge in numpy — a cost-based
+    plan choice; larger queries run the distributed plan above.
   * late materialization: display fields joined from ``docmap`` only AFTER
     the limit (QueryComponent#distributedProcess two-phase retrieval analog).
 
@@ -38,12 +44,23 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import log
 from ..functions.analysis import tokenize_text
 from ..functions.packing import delta_decode, unpack_ints
 from ..sources.catalog import Segment
 from . import bm25
 
 _TOPK_SCHEMA = "doc_id long, score float"
+
+# Row budget of every driver-side fetch a single-segment Searcher makes:
+# the terms dict it loads at open (skipped above this many terms), the
+# driver copy of a cached fq set, and the postings/positions rows of a
+# query routed to the driver scorer (postings blocks + positions rows,
+# summed from the terms dict). A query over it runs the distributed
+# applyInPandas plan. Sized from the measured crossover of the two routes
+# for 2-41-term queries on a 200k-doc, 25-bucket index at local[4]: ~14k
+# postings rows for OR, ~16k for AND (README "Query path").
+LOCAL_ROW_BUDGET = 14_000
 
 
 @dataclass
@@ -95,17 +112,7 @@ def _apply_term_patterns(t, prefix, wildcard, fuzzy, regexp, term_range):
     if prefix is not None:
         t = t.filter(F.col("term").startswith(prefix))
     if wildcard is not None:
-        # WildcardQuery (search/WildcardQuery.java): only '*' and '?' are
-        # wildcards — literal '%'/'_' in a term must stay literal, so
-        # escape them before translating to SQL LIKE (default escape '\')
-        pat = (
-            wildcard.replace("\\", "\\\\")
-            .replace("%", r"\%")
-            .replace("_", r"\_")
-            .replace("*", "%")
-            .replace("?", "_")
-        )
-        t = t.filter(F.col("term").like(pat))
+        t = t.filter(F.col("term").like(_wildcard_to_like(wildcard)))
     if fuzzy is not None:
         # FuzzyQuery (search/FuzzyQuery.java): Lucene's metric is OSA
         # (Damerau with transpositions, the LevenshteinAutomata default,
@@ -142,6 +149,27 @@ def _apply_term_patterns(t, prefix, wildcard, fuzzy, regexp, term_range):
     return t
 
 
+def _wildcard_to_like(pattern: str) -> str:
+    """WildcardQuery pattern (search/WildcardQuery.java) -> SQL LIKE
+    pattern (escape character '\\'). Only '*' and '?' are wildcards;
+    '\\' escapes the next character, so '\\*' and '\\?' match a literal
+    '*' / '?' (WILDCARD_ESCAPE), and a trailing lone '\\' is a literal
+    backslash, as in WildcardQuery#toAutomaton. LIKE's own metacharacters
+    '%', '_' and '\\' stay literal."""
+    out = []
+    chars = iter(pattern)
+    for c in chars:
+        if c == "*":
+            out.append("%")
+        elif c == "?":
+            out.append("_")
+        else:
+            if c == "\\":
+                c = next(chars, "\\")
+            out.append("\\" + c if c in "%_\\" else c)
+    return "".join(out)
+
+
 class FilterCache:
     """Searcher-level filter cache — the LRUQueryCache analog
     (search/LRUQueryCache.java): caches the MATERIALIZED doc-id set of a
@@ -153,24 +181,39 @@ class FilterCache:
     def __init__(self, max_entries: int = 32):
         from collections import OrderedDict
 
-        self._entries: "OrderedDict[tuple, DataFrame]" = OrderedDict()
+        # key -> (persisted set, its driver copy or None)
+        self._entries: "OrderedDict[tuple, tuple[DataFrame, pd.DataFrame | None]]" = (
+            OrderedDict()
+        )
         self.max_entries = max_entries
         self.hits = 0
         self.misses = 0
 
-    def get_or_build(self, key: tuple, builder) -> DataFrame:
+    def get_or_build(self, key: tuple, builder, driver_copy: bool = False) -> DataFrame:
+        """The cached set for ``key``, built on a miss. ``driver_copy``:
+        on a miss, also keep the set's (bucket, doc_id) rows on the driver,
+        sorted by doc_id, when its count fits LOCAL_ROW_BUDGET — taken
+        here, once, so the queries that use it fetch nothing more."""
         if key in self._entries:
             self.hits += 1
             self._entries.move_to_end(key)
-            return self._entries[key]
+            return self._entries[key][0]
         self.misses += 1
         df = builder().persist()
-        df.count()  # materialize now (cache the bitset, not the plan)
-        self._entries[key] = df
+        n = df.count()  # materialize now (cache the bitset, not the plan)
+        rows = None
+        if driver_copy and n <= LOCAL_ROW_BUDGET:
+            rows = df.toPandas().sort_values("doc_id", ignore_index=True)
+        self._entries[key] = (df, rows)
         while len(self._entries) > self.max_entries:
-            _, old = self._entries.popitem(last=False)
+            _, (old, _) = self._entries.popitem(last=False)
             old.unpersist()
         return df
+
+    def driver_rows(self, key: tuple) -> pd.DataFrame | None:
+        """The driver copy kept for ``key`` by get_or_build, if any."""
+        ent = self._entries.get(key)
+        return None if ent is None else ent[1]
 
 
 class QueryResultCache:
@@ -224,6 +267,15 @@ class Searcher:
         self._cache = bm25.norm_cache(self.stats.avgdl)
         self.filter_cache = FilterCache()
         self.result_cache: QueryResultCache | None = None
+        # term -> (df, n_blocks) on the driver — the on-heap terms index
+        # (BlockTreeTermsReader analog): term stats and query routing read
+        # it with no Spark job. None above LOCAL_ROW_BUDGET terms.
+        self.term_dict: dict[str, tuple[int, int]] | None = None
+        if self.stats.n_terms <= LOCAL_ROW_BUDGET:
+            pdf = self.terms.select("term", "df", "n_blocks").toPandas()
+            self.term_dict = dict(
+                zip(pdf["term"], zip(pdf["df"].tolist(), pdf["n_blocks"].tolist()))
+            )
 
     def enable_result_cache(
         self, max_entries: int = 64, window: int = 50
@@ -247,7 +299,28 @@ class Searcher:
             fetched = run(wk).collect()
             rc.put(key, fetched, complete=len(fetched) < wk)
             rows = fetched[:k]
-        return self.spark.createDataFrame(rows, _TOPK_SCHEMA)
+        return topk_frame(
+            self.spark, [r["doc_id"] for r in rows], [r["score"] for r in rows]
+        )
+
+    def _fetch_rows(self, postings_terms, positions_terms=()) -> float:
+        """Rows a query would fetch to the driver, from the terms dict: the
+        blocks of each postings term plus one positions row per (term, doc)
+        of each positions term. inf without a terms dict (distributed)."""
+        d = self.term_dict
+        if d is None:
+            return math.inf
+        return sum(d.get(t, (0, 0))[1] for t in postings_terms) + sum(
+            d.get(t, (0, 0))[0] for t in positions_terms
+        )
+
+    def _filter(self, fq: str | None) -> tuple[DataFrame | None, pd.DataFrame | None]:
+        """An fq's cached (bucket, doc_id) set and its driver copy (None
+        when the set is over LOCAL_ROW_BUDGET); (None, None) without fq."""
+        if not fq:
+            return None, None
+        docs = self.fq_docs(fq)
+        return docs, self.filter_cache.driver_rows(("fq", fq))
 
     # -- Weight#createWeight analog: per-query stats pre-pass ---------------
     def attach_bloom(self, bloom=None, fp: float = 0.01):
@@ -265,18 +338,20 @@ class Searcher:
     def term_stats(self, terms: list[str]) -> dict[str, TermStats]:
         if not terms:
             return {}
-        bloom = getattr(self, "bloom", None)
-        if bloom is not None:
-            terms = [t for t in terms if bloom.might_contain(t)]
-            if not terms:  # no false negatives -> truly absent, zero jobs
-                return {}
-        rows = self.terms.filter(F.col("term").isin(terms)).collect()
-        out = {}
-        for r in rows:
-            out[r["term"]] = TermStats(
-                term=r["term"], df=int(r["df"]), idf=bm25.idf(self.stats.n_docs, int(r["df"]))
-            )
-        return out
+        if self.term_dict is not None:
+            dfs = {t: self.term_dict[t][0] for t in terms if t in self.term_dict}
+        else:
+            bloom = getattr(self, "bloom", None)
+            if bloom is not None:
+                terms = [t for t in terms if bloom.might_contain(t)]
+                if not terms:  # no false negatives -> truly absent, zero jobs
+                    return {}
+            rows = self.terms.filter(F.col("term").isin(terms)).collect()
+            dfs = {r["term"]: int(r["df"]) for r in rows}
+        return {
+            t: TermStats(term=t, df=df, idf=bm25.idf(self.stats.n_docs, df))
+            for t, df in dfs.items()
+        }
 
     def fq_docs(self, fq: str) -> DataFrame:
         """Materialize (and cache) the doc-id set of a filter query over
@@ -286,9 +361,12 @@ class Searcher:
         cogroups it without ever collecting it to the driver. Predicates
         touching only stored columns run against the raw stored-fields
         table (join-free plan); only dl/norm_byte predicates pay the lazy
-        norms join."""
+        norms join. A set within LOCAL_ROW_BUDGET docs also keeps a driver
+        copy for the driver route, taken here with the set."""
         return self.filter_cache.get_or_build(
-            ("fq", fq), lambda: build_fq_docs(self.spark, self.segment, fq)
+            ("fq", fq),
+            lambda: build_fq_docs(self.spark, self.segment, fq),
+            driver_copy=True,
         )
 
     def topk(
@@ -322,11 +400,12 @@ class Searcher:
         stats = self.term_stats(q_terms)
         matched = sorted(stats)  # lexicographic — pinned summation order
         if not matched or (op == "and" and len(matched) < len(q_terms)):
-            return self.spark.createDataFrame([], _TOPK_SCHEMA)
+            return topk_frame(self.spark)
 
         idfs = {t: np.float32(stats[t].idf) for t in matched}
         use_wand = mode == "wand"  # "and" routes to the BlockMaxConjunction branch
-        per_bucket = score_postings(
+        filter_docs, filter_local = self._filter(fq)
+        return score_postings(
             self.postings,
             idfs,
             self._cache,
@@ -335,9 +414,10 @@ class Searcher:
             len(q_terms),
             self.stats.avgdl,
             use_wand,
-            filter_docs=self.fq_docs(fq) if fq else None,
+            filter_docs=filter_docs,
+            filter_local=filter_local,
+            fetch_rows=self._fetch_rows(matched),
         )
-        return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def topk_query(self, q, k: int = 10, fq: str | None = None) -> DataFrame:
         """Top-k BM25 for a Boolean query tree (operators/query.py) — the
@@ -374,7 +454,7 @@ class Searcher:
         phrases = collect_phrases(q)
         stats = self.term_stats(sorted(collect_terms(q)))
         if not stats:
-            return self.spark.createDataFrame([], _TOPK_SCHEMA)
+            return topk_frame(self.spark)
         leaf_terms = collect_term_leaves(q)
         idfs = {
             t: np.float32(stats[t].idf) for t in sorted(stats) if t in leaf_terms
@@ -401,13 +481,17 @@ class Searcher:
                         sum(stats[t].idf for t in p.terms)
                     )
             positions = self.segment.table(self.spark, "positions")
-        per_bucket = score_query_postings(
+        filter_docs, filter_local = self._filter(fq)
+        return score_query_postings(
             self.postings, q, idfs, self._cache, k,
             positions=positions, phrase_idfs=phrase_idfs,
-            filter_docs=self.fq_docs(fq) if fq else None,
+            filter_docs=filter_docs, filter_local=filter_local,
             syn_idfs=syn_idfs,
+            fetch_rows=self._fetch_rows(
+                set(idfs) | {t for sq in syn_idfs for t in sq.terms},
+                {t for p in phrase_idfs for t in p.terms},
+            ),
         )
-        return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def search(self, query_string: str, k: int = 10, fq: str | None = None) -> DataFrame:
         """Parse a classic Lucene query string (plans/qparser.py —
@@ -457,7 +541,8 @@ class Searcher:
                 "operators.fields.FieldedSearcher"
             )
         hits = phrase_topk(
-            self.spark, self.segment, " ".join(terms), k=k, slop=slop
+            self.spark, self.segment, " ".join(terms), k=k, slop=slop,
+            term_dict=self.term_dict,
         )
         if boost != 1.0:
             hits = hits.select(
@@ -520,9 +605,10 @@ class Searcher:
         stats = self.term_stats(q_terms)
         matched = sorted(stats)
         if not matched or (op == "and" and len(matched) < len(q_terms)):
-            return self.spark.createDataFrame([], _TOPK_SCHEMA)
+            return topk_frame(self.spark)
         idfs = {t: np.float32(stats[t].idf) for t in matched}
-        per_bucket = score_postings(
+        filter_docs, filter_local = self._filter(fq)
+        return score_postings(
             self.postings,
             idfs,
             self._cache,
@@ -532,9 +618,10 @@ class Searcher:
             self.stats.avgdl,
             use_wand=False,
             after=(after_score, after_doc),
-            filter_docs=self.fq_docs(fq) if fq else None,
+            filter_docs=filter_docs,
+            filter_local=filter_local,
+            fetch_rows=self._fetch_rows(matched),
         )
-        return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def explain(self, query_text: str, doc_id: int) -> dict:
         """IndexSearcher#explain analog: per-term score breakdown for one
@@ -598,14 +685,14 @@ class Searcher:
         sim.prepare(self.stats.n_docs, self.stats.avgdl)
         q_terms = sorted(set(tokenize_text(query_text)))
         if not q_terms:
-            return self.spark.createDataFrame([], _TOPK_SCHEMA)
+            return topk_frame(self.spark)
         rows = self.terms.filter(F.col("term").isin(q_terms)).collect()
         states = {
             r["term"]: sim.weight(int(r["df"]), int(r["ttf"]), self.stats.sum_ttf)
             for r in rows
         }
         if not states or (op == "and" and len(states) < len(q_terms)):
-            return self.spark.createDataFrame([], _TOPK_SCHEMA)
+            return topk_frame(self.spark)
         n_req = len(q_terms)
 
         def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -651,7 +738,7 @@ class Searcher:
         doc scores ``boost``, tie-break doc_id asc -> top-k = first k ids.
         ``deleted``: optional tombstoned doc_id array, excluded (liveDocs)."""
         if not terms:
-            return self.spark.createDataFrame([], _TOPK_SCHEMA)
+            return topk_frame(self.spark)
         from .merge import decode_postings
 
         docs = self.filter_cache.get_or_build(
@@ -783,6 +870,86 @@ class Searcher:
         return self.topk_constant(self.expand_terms(term_range=(lo, hi)), k)
 
 
+def topk_frame(spark: SparkSession, doc_ids=(), scores=()) -> DataFrame:
+    """A top-k answer already on the driver as a (doc_id, score)
+    DataFrame. Built from pandas through Arrow, so it plans as a local
+    table scan: collecting it launches no Spark job."""
+    pdf = pd.DataFrame(
+        {
+            "doc_id": np.asarray(doc_ids, dtype=np.int64),
+            "score": np.asarray(scores, dtype=np.float32),
+        }
+    )
+    df = spark.createDataFrame(pdf, _TOPK_SCHEMA)
+    # an empty frame plans as an RDD scan (a job to collect); limit(0)
+    # folds it into an empty local relation
+    return df if len(pdf) else df.limit(0)
+
+
+def score_buckets(
+    left: DataFrame,
+    leaf,
+    k: int,
+    right: DataFrame | None = None,
+    fetch_rows: float | None = None,
+    right_local=None,
+) -> DataFrame:
+    """Run a per-bucket scoring leaf — ``leaf(pdf)``, or ``leaf(left,
+    right)`` cogrouped on ``bucket`` when ``right`` is given — and pick its
+    execution route. Every scorer runs its buckets through here.
+
+    ``fetch_rows`` None: the distributed plan (groupBy("bucket")
+    .applyInPandas, or cogroup), returning each bucket's local top-k
+    un-merged, for callers that merge across segments themselves.
+
+    Otherwise the caller wants the final top-k, and ``fetch_rows`` is the
+    rows the query would fetch (from the searcher's terms dict). When it
+    fits LOCAL_ROW_BUDGET and the right side, if any, can be built on the
+    driver (``right_local``: a callable returning it as pandas, or None
+    when it cannot be within the budget), the query runs on the driver:
+    one Arrow toPandas fetches ``left`` (``right_local`` makes at most one
+    more fetch), the same leaf runs once per bucket, and the results merge
+    by (score desc, doc_id asc) into a local DataFrame — no Python-UDF
+    job, no orderBy/limit on top. Else the distributed plan runs with the
+    global orderBy/limit (TopDocs#merge)."""
+    if fetch_rows is None:
+        return _distributed_buckets(left, leaf, right)
+    local = fetch_rows <= LOCAL_ROW_BUDGET and (right is None or right_local is not None)
+    log.debug(
+        "bucket scorer route=%s rows=%s budget=%s",
+        "driver" if local else "distributed", fetch_rows, LOCAL_ROW_BUDGET,
+    )
+    if not local:
+        per_bucket = _distributed_buckets(left, leaf, right)
+        return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    lpdf = left.toPandas()
+    groups = {b: g.reset_index(drop=True) for b, g in lpdf.groupby("bucket")}
+    if right is None:
+        outs = [leaf(groups[b]) for b in sorted(groups)]
+    else:
+        rpdf = right_local()
+        rgroups = {b: g.reset_index(drop=True) for b, g in rpdf.groupby("bucket")}
+        outs = [
+            leaf(groups.get(b, lpdf.iloc[:0]), rgroups.get(b, rpdf.iloc[:0]))
+            for b in sorted(groups.keys() | rgroups.keys())
+        ]
+    if not outs:
+        return topk_frame(left.sparkSession)
+    out = pd.concat(outs, ignore_index=True)
+    ids = out["doc_id"].to_numpy(dtype=np.int64)
+    scores = out["score"].to_numpy(dtype=np.float32)
+    order = np.lexsort((ids, -scores))[:k]
+    return topk_frame(left.sparkSession, ids[order], scores[order])
+
+
+def _distributed_buckets(left: DataFrame, leaf, right: DataFrame | None) -> DataFrame:
+    if right is None:
+        return left.groupBy("bucket").applyInPandas(leaf, _TOPK_SCHEMA)
+    return left.groupBy("bucket").cogroup(right.groupBy("bucket")).applyInPandas(
+        leaf, _TOPK_SCHEMA
+    )
+
+
 def build_fq_docs(spark: SparkSession, segment: Segment, fq: str) -> DataFrame:
     """(bucket, doc_id) set of one segment's docs passing an fq predicate.
     Stored-column predicates run join-free against the raw stored-fields
@@ -815,10 +982,15 @@ def score_postings(
     after: tuple[float, int] | None = None,
     filter_docs: DataFrame | None = None,
     deleted_docs: DataFrame | None = None,
+    filter_local: pd.DataFrame | None = None,
+    fetch_rows: float | None = None,
 ) -> DataFrame:
     """Per-bucket scoring plan over a postings table (per-leaf Scorer DAG +
-    TopScoreDocCollector analog). Returns an un-merged DataFrame of local
-    top-k (doc_id, score) rows; caller applies the global merge/limit.
+    TopScoreDocCollector analog). Without ``fetch_rows``, returns an
+    un-merged DataFrame of local top-k (doc_id, score) rows and the caller
+    applies the global merge/limit; with it, the merged top-k on the
+    route score_buckets picks (``filter_local``: the driver copy of
+    ``filter_docs``, needed for the driver route).
     ``deleted``: optional sorted int64 array of this segment's tombstoned
     doc_ids, masked out BEFORE local top-k selection (liveDocs analog).
     ``after``: optional (score, doc_id) cursor applied before the local
@@ -841,7 +1013,7 @@ def score_postings(
 
     rows = postings.filter(F.col("term").isin(matched))
     if filter_docs is None and deleted_docs is None:
-        return rows.groupBy("bucket").applyInPandas(score_bucket, _TOPK_SCHEMA)
+        return score_buckets(rows, score_bucket, k, fetch_rows=fetch_rows)
 
     has_filter = filter_docs is not None  # closures must not capture the DFs
     right_df = None
@@ -878,11 +1050,19 @@ def score_postings(
             dele, after, allowed_rel=allowed_rel,
         )
 
-    return (
-        rows.groupBy("bucket")
-        .cogroup(right_df.groupBy("bucket"))
-        .applyInPandas(score_bucket_filtered, _TOPK_SCHEMA)
+    return score_buckets(
+        rows, score_bucket_filtered, k, right_df, fetch_rows,
+        _filter_side(filter_local, deleted_docs),
     )
+
+
+def _filter_side(filter_local: pd.DataFrame | None, deleted_docs):
+    """The driver route's cogroup side for an fq: its driver copy tagged
+    ``neg=False``. None when it has no driver copy or tombstones ride the
+    same side (they stay on the executors)."""
+    if filter_local is None or deleted_docs is not None:
+        return None
+    return lambda: filter_local.assign(neg=False)
 
 
 def score_query_postings(
@@ -899,6 +1079,8 @@ def score_query_postings(
     filter_docs: DataFrame | None = None,
     syn_idfs: dict | None = None,
     deleted_docs: DataFrame | None = None,
+    filter_local: pd.DataFrame | None = None,
+    fetch_rows: float | None = None,
 ) -> DataFrame:
     """Per-bucket Boolean-tree scoring plan (Boolean2ScorerSupplier analog).
     ``filter_docs``: optional (bucket, doc_id) fq set — same semantics as
@@ -912,8 +1094,9 @@ def score_query_postings(
     ``caches``/``phrase_caches``: optional per-term / per-Phrase norm-cache
     overrides (FieldedSearcher: each field has its own avgdl, so tagged
     terms score with their field's cache; default = ``cache``).
-    Same shape as score_postings: one applyInPandas leaf per bucket, local
-    top-k out, caller merges globally.
+    Same shape as score_postings: one leaf per bucket, local top-k out,
+    caller merges globally — or, with ``fetch_rows``, the merged top-k on
+    the route score_buckets picks (``filter_local`` as in score_postings).
 
     Phrase clauses (operators/query.py#Phrase — PhraseQuery as a
     BooleanClause, search/PhraseWeight.java): pass the segment's
@@ -1124,7 +1307,7 @@ def score_query_postings(
     rows = postings.filter(F.col("term").isin(scan_terms))
     if positions is None or not phrase_meta:
         if filter_docs is None and deleted_docs is None:
-            return rows.groupBy("bucket").applyInPandas(score_bucket, _TOPK_SCHEMA)
+            return score_buckets(rows, score_bucket, k, fetch_rows=fetch_rows)
         right_df = None
         if filter_docs is not None:
             right_df = filter_docs.select(
@@ -1135,10 +1318,9 @@ def score_query_postings(
                 "bucket", "doc_id", F.lit(True).alias("neg")
             )
             right_df = negs if right_df is None else right_df.unionByName(negs)
-        return (
-            rows.groupBy("bucket")
-            .cogroup(right_df.groupBy("bucket"))
-            .applyInPandas(score_bucket_filtered, _TOPK_SCHEMA)
+        return score_buckets(
+            rows, score_bucket_filtered, k, right_df, fetch_rows,
+            _filter_side(filter_local, deleted_docs),
         )
     pos_terms = sorted({t for _, dterms in phrase_meta.values() for t in dterms})
     posrows = positions.filter(F.col("term").isin(pos_terms))
@@ -1156,19 +1338,32 @@ def score_query_postings(
             cols.append(F.lit(None).cast("binary").alias("end_bin"))
         return docs.select(*cols)
 
+    right_df = posrows
     if filter_docs is not None or deleted_docs is not None:
         posrows = posrows.select(
             "term", "bucket", "doc_id", "norm_byte", "pos_bin",
             *(["end_bin"] if has_graph else []),
         )
+        right_df = posrows
         if filter_docs is not None:
-            posrows = posrows.unionByName(_markers(filter_docs, ""))
+            right_df = right_df.unionByName(_markers(filter_docs, ""))
         if deleted_docs is not None:
-            posrows = posrows.unionByName(_markers(deleted_docs, "\x00"))
-    return (
-        rows.groupBy("bucket")
-        .cogroup(posrows.groupBy("bucket"))
-        .applyInPandas(score_bucket_cogrouped, _TOPK_SCHEMA)
+            right_df = right_df.unionByName(_markers(deleted_docs, "\x00"))
+
+    def right_local() -> pd.DataFrame:
+        # the positions rows fetched, the fq markers from the driver copy
+        pos = posrows.toPandas()
+        if filter_docs is None:
+            return pos
+        marks = filter_local.assign(term="", norm_byte=0, pos_bin=None)
+        if has_graph:
+            marks = marks.assign(end_bin=None)
+        return pd.concat([pos, marks[pos.columns]], ignore_index=True)
+
+    can_local = deleted_docs is None and (filter_docs is None or filter_local is not None)
+    return score_buckets(
+        rows, score_bucket_cogrouped, k, right_df, fetch_rows,
+        right_local if can_local else None,
     )
 
 
@@ -1822,7 +2017,7 @@ def exhaustive_scores(searcher: Searcher, query_text: str, op: str = "or") -> Da
     if not matched or (op == "and" and len(matched) < len(q_terms)):
         # conjunction with an absent query term matches nothing — mirror
         # topk()'s early return so this debug oracle agrees with it
-        return searcher.spark.createDataFrame([], _TOPK_SCHEMA)
+        return topk_frame(searcher.spark)
     idfs = {t: np.float32(stats[t].idf) for t in matched}
     cache = searcher._cache
     big_k = searcher.stats.n_docs  # no truncation
@@ -1831,7 +2026,7 @@ def exhaustive_scores(searcher: Searcher, query_text: str, op: str = "or") -> Da
         return _score_bucket(pdf, idfs, cache, big_k, op, len(matched), searcher.stats.avgdl, False)
 
     rows = searcher.postings.filter(F.col("term").isin(matched))
-    return rows.groupBy("bucket").applyInPandas(score_bucket, _TOPK_SCHEMA)
+    return score_buckets(rows, score_bucket, big_k)
 
 
 def sorted_index_topk(

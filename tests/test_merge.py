@@ -315,6 +315,37 @@ def test_catalog_merge_refuses_foreign_out_dir(spark, tmp_path):
     assert [s.segment_id for s in cat.segments()] == ["s0"]  # nothing lost
 
 
+def test_catalog_merge_accepts_other_spellings_of_root(spark, tmp_path):
+    """An out_dir naming catalog.root through a trailing slash or a
+    symlink is the catalog's own directory: the merge stages and commits
+    there instead of being refused as foreign."""
+    import os
+
+    from lucene_solr_spark.corpus import stamp_sha256
+
+    schema = (
+        "doc_id long, repo string, path string, commit string, "
+        "lang string, content string"
+    )
+    root = str(tmp_path / "cat3")
+    cat = Catalog(root)
+    os.symlink(root, str(tmp_path / "link"))
+    for i, text in enumerate(["order batch", "stream order", "batch join"]):
+        d = spark.createDataFrame([(i, "r", f"p{i}", "c", "en", text)], schema)
+        build_index(spark, stamp_sha256(d), out_dir=root, segment_id=f"s{i}")
+    cat.commit_swap(add=["s0", "s1", "s2"])
+    merge_segments(
+        spark, cat.segments()[:2], catalog=cat, out_dir=root + "/", segment_id="m1"
+    )
+    assert sorted(s.segment_id for s in cat.segments()) == ["m1", "s2"]
+    merge_segments(
+        spark, cat.segments(), catalog=cat, out_dir=str(tmp_path / "link"),
+        segment_id="m2",
+    )
+    assert [s.segment_id for s in cat.segments()] == ["m2"]
+    assert Searcher(spark, cat.segments()[0]).topk("order", k=5).count() == 2
+
+
 def test_delete_by_query_idempotent(spark, tmp_path):
     """Re-deleting already-tombstoned docs writes nothing and counts 0
     (liveDocs bit semantics)."""

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from lucene_solr_spark.corpus import synth_corpus
+from lucene_solr_spark.operators import search
 from lucene_solr_spark.operators.indexer import build_index
 from lucene_solr_spark.operators.search import Searcher
 
@@ -26,6 +27,13 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+@pytest.fixture
+def distributed(monkeypatch):
+    """Pin Searcher queries to the distributed applyInPandas plan, whose
+    shape these tests assert (small queries otherwise run on the driver)."""
+    monkeypatch.setattr(search, "LOCAL_ROW_BUDGET", 0)
+
+
 def test_term_filter_pushed_to_parquet_scan(spark, disk_seg):
     plan = _plan(
         disk_seg.table(spark, "postings").filter(
@@ -35,7 +43,7 @@ def test_term_filter_pushed_to_parquet_scan(spark, disk_seg):
     assert "PushedFilters: [In(term, [import,return])]" in plan
 
 
-def test_topk_plan_is_narrow_until_limit(spark, disk_seg):
+def test_topk_plan_is_narrow_until_limit(spark, disk_seg, distributed):
     """The scoring plan reads only postings columns (no docmap fields) and
     ends in a TakeOrderedAndProject — display fields join after the limit."""
     s = Searcher(spark, disk_seg)
@@ -85,7 +93,7 @@ def test_span_plan_prunes_positions_scan(spark, disk_seg_pos):
     assert "/positions" in plan and "/docmap" not in plan
 
 
-def test_phrase_tree_cogroup_single_exchange_per_side(spark, disk_seg_pos):
+def test_phrase_tree_cogroup_single_exchange_per_side(spark, disk_seg_pos, distributed):
     """The cogrouped postings+positions tree scorer shuffles each side
     exactly once (hash on bucket) — no join, no extra exchange."""
     from lucene_solr_spark.operators.query import Bool, Phrase, Term
@@ -99,7 +107,7 @@ def test_phrase_tree_cogroup_single_exchange_per_side(spark, disk_seg_pos):
     assert "FlatMapCoGroupsInPandas" in plan
 
 
-def test_fq_plan_no_join_and_pruned_scan(spark, disk_seg_pos):
+def test_fq_plan_no_join_and_pruned_scan(spark, disk_seg_pos, distributed):
     """fq cogroups the filter set by bucket: no join operator appears, and
     the docmap scan for the filter reads only the predicate+id columns."""
     from lucene_solr_spark.operators.search import Searcher

@@ -247,6 +247,27 @@ def test_wildcard_escapes_like_metachars(spark):
     assert s.expand_terms(wildcard="foo?bar") == ["fooxbar"]  # '?' wild
 
 
+def test_wildcard_backslash_escapes(spark):
+    """Lucene's WildcardQuery escapes: '\\*' / '\\?' match a literal '*' /
+    '?', '\\\\' a literal backslash, and a trailing lone '\\' is literal."""
+    from lucene_solr_spark.operators.search import _apply_term_patterns
+
+    terms = spark.createDataFrame(
+        [("a*b",), ("axb",), ("a?b",), ("a\\b",), ("ab\\",), ("abc",)], "term string"
+    )
+
+    def expand(pattern):
+        t = _apply_term_patterns(terms, None, pattern, None, None, None)
+        return sorted(r["term"] for r in t.collect())
+
+    assert expand("a\\*b") == ["a*b"]
+    assert expand("a\\?b") == ["a?b"]
+    assert expand("a?b") == ["a*b", "a?b", "a\\b", "axb"]
+    assert expand("a\\\\b") == ["a\\b"]
+    assert expand("ab\\") == ["ab\\"]
+    assert expand("a*\\*") == []
+
+
 def test_regexp_matches_entire_term(built):
     """RegexpQuery semantics: the pattern must match the WHOLE term."""
     searcher, _ = built
